@@ -2,12 +2,13 @@
 
 .PHONY: test test-fast bench self-report all
 
-# full differential + unit suite, single-process (~11-13 min; kept for
-# bisecting — the documented GATE is test-fast below)
+# the default tier (pytest.ini deselects `slow`), single-process (~18 min
+# on 4 cores; kept for bisecting — the documented GATE, test-fast below,
+# runs both tiers)
 test:
 	python -m pytest tests/ -q
 
-# THE GATE (promoted round 7, VERDICT r6 task 3): the same suite in
+# THE GATE (promoted round 7, VERDICT r6 task 3): both tiers in
 # cost-balanced process groups (own JVM each, no pytest-xdist in this
 # container) — same tests, zero removals, ~max(group) wall time.
 # Group membership lives in tools/gate_groups.json (the last group is
@@ -19,10 +20,11 @@ test:
 test-fast:
 	python tools/run_gate.py
 
-# headline bench at $$SPARK_GRAFT_SF_DIR (default sf0.1); compact JSON
-# line on stdout, samples + full sweep in BENCH_DETAIL.json
+# the benchmark (BENCHMARK.json): one 16 s run of each workload at seed 1;
+# each prints an info line and a JSON result line
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload ingest_sync --seed 1 --seconds 16
+	python3 perfbench/run.py --workload rag_query --seed 1 --seconds 16
 
 # regenerate ORACLE_SELF_REPORT.json: every registered query vs its
 # DuckDB oracle at sf0.01 (driver-gate replica, value hashes included)

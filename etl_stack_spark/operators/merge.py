@@ -750,8 +750,7 @@ class PartitionedMergeTable:
         pcol = self.partition_col
         if pcol not in keys:
             raise ValueError(f"partition column {pcol!r} must be part of the merge keys")
-        if source.filter(F.col(pcol).isNull()).limit(1).count() > 0:
-            raise ValueError(f"merge source contains NULL {pcol!r}")
+        # pcol is a key, so the NULL-key guard also rejects a NULL partition value
         null_key = None
         for k in keys:
             piece = F.col(k).isNull()

@@ -1,7 +1,7 @@
 """SparkSession builder + table loading for the engine.
 
-Scale notes (100 TB): the conf below is sized for local[32] testing but the
-knobs are the ones that matter on a 1000-executor cluster — AQE on (runtime
+Scale notes (100 TB): the conf below sizes a local session to its host but
+the knobs are the ones that matter on a 1000-executor cluster — AQE on (runtime
 coalesce + skew-join splitting), broadcast threshold high enough that dim
 tables (region/nation/config) always broadcast, shuffle partitions sized to
 cores locally and to ~2-3× total cores (or AQE-advisory target) on a cluster.
@@ -29,6 +29,36 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# ceiling on the default driver heap: what the lead-prep match stream
+# needs at sf0.1 (see get_spark), and no more on a large host
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_mem(mem_total_kb: int | None) -> str:
+    """Driver heap for a host with ``mem_total_kb`` of RAM: half of it,
+    capped at 24g (24g when the host's memory is unknown)."""
+    if mem_total_kb is None:
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(mem_total_kb // 2048, MAX_DRIVER_MEM_MB)}m"
+
+
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return os.cpu_count() or 1
+
+
+def _mem_total_kb() -> int | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
 
 def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
@@ -40,7 +70,10 @@ def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> Spa
       batches, not pickled rows.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(
+        _mem_total_kb()
+    )
     # make this package importable on Python workers regardless of the
     # driver's cwd — mapInPandas/pandas_udf closures deserialize by module
     # reference (on a real cluster, ship a wheel / addPyFile instead)
@@ -63,11 +96,11 @@ def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> Spa
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # 24g on a 128 GiB box: the shared lead-prep match stream persists
-        # ~2 GB at sf0.1 and must not fight execution memory for it — an
-        # 8g heap evicted it under concurrent stages (a2a3 samples spiked
-        # 1.8s → 13s when the cache fell to disk mid-bench)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # default: half the host's RAM, at most 24g — the shared lead-prep
+        # match stream persists ~2 GB at sf0.1 and must not fight execution
+        # memory for it (an 8g heap evicted it under concurrent stages,
+        # spiking a2a3 from 1.8s to 13s when the cache fell to disk)
+        .config("spark.driver.memory", driver_mem)
         # verification flows collect full results (33M rows for the radius
         # join at sf0.1) — default 1g cap aborts the collect, not the query
         .config("spark.driver.maxResultSize", "4g")

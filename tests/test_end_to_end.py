@@ -22,17 +22,16 @@ from etl_stack_spark.plans.ingest import clean_and_hash, load_to_lead_properties
 from etl_stack_spark.plans.lead_prep import lead_prep_packages
 from etl_stack_spark.queries.geo import CATEGORIES, pois_df
 from etl_stack_spark.sources.rest import (
-
-import pytest
-# slow tier (VERDICT r10 task 1): full property-chain e2e;
-# run via tools/run_gate.py (the gate) or `pytest -m slow`.
-pytestmark = pytest.mark.slow
-
     detail_fetch,
     fake_detail_transport,
     fake_transport_factory,
     paginated_rest_scan,
 )
+
+import pytest
+# slow tier (VERDICT r10 task 1): full property-chain e2e;
+# run via tools/run_gate.py (the gate) or `pytest -m slow`.
+pytestmark = pytest.mark.slow
 
 
 def test_full_property_chain(spark, tmp_path):

@@ -51,7 +51,7 @@ def main() -> None:
     from etl_stack_spark.operators import similarity as new
     from etl_stack_spark.session import get_spark
 
-    spark = get_spark("adc-fuse-1m", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("adc-fuse-1m")
     spark.sparkContext.setLogLevel("ERROR")
 
     d_idx = F.sequence(F.lit(0), F.lit(63))

@@ -44,7 +44,8 @@ def main() -> int:
     durations = "--durations" in sys.argv
     groups = load_groups()
     explicit = [p for g in groups for p in g]
-    extra = ["--durations=0"] if durations else []
+    # `-o addopts=` drops pytest.ini's `-m "not slow"`: the gate runs both tiers
+    extra = ["-o", "addopts=", *(["--durations=0"] if durations else [])]
     procs = []
     for i, g in enumerate(groups):
         log = f"{LOG_PREFIX}{i + 1}.log"
